@@ -23,16 +23,18 @@ Reference semantics:
 
 from __future__ import annotations
 
-from typing import List, Tuple
+import json
+from typing import Iterator, List, Optional, Tuple
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from kgforge import tokenizer
 from kgforge.gochunk import GoParseError, chunk_go
-from kgforge.schemas import CHUNK_ARRAY_TYPE
+from kgforge.schemas import CHUNK_ELEMENT_SCHEMA
 
 DEFAULT_MAX_TOKENS = 1024  # default.go:41
 DEFAULT_OVERLAP_TOKENS = 128  # default.go:42
@@ -77,17 +79,46 @@ def chunk_default(
     return out
 
 
+def chunk_content(
+    lang: str, text: str, max_tokens: int, overlap_tokens: int
+) -> List[Tuple[str, int, int]]:
+    """The one chunker dispatch on ``lang`` (S3, examples/multiple/
+    main.go:418-425): ``go`` -> C2 Go scanner, ``markdown``/``md`` ->
+    heading sections, ``semantic`` -> C3 (handler/semantic.go:63-214)
+    with the deterministic paragraph span-proposer, else C1 default
+    window.  Raises :class:`GoParseError` on invalid Go."""
+    if lang == "go":
+        return chunk_go(text)
+    if lang in ("markdown", "md"):
+        from kgforge.markdown import chunk_markdown
+
+        return chunk_markdown(text)
+    if lang == "semantic":
+        from kgforge.semantic import chunk_semantic
+
+        return chunk_semantic(text, max_tokens=max_tokens)
+    return chunk_default(text, max_tokens, overlap_tokens)
+
+
 def make_chunker_udf(
     max_tokens: int = DEFAULT_MAX_TOKENS,
     overlap_tokens: int = DEFAULT_OVERLAP_TOKENS,
+    extractor: Optional[str] = None,
 ):
     """Vectorized chunker: (lang, content) -> array<chunk struct>.
 
-    Dispatches per row on ``lang`` (S3, examples/multiple/main.go:
-    418-425): ``go`` -> C2 Go scanner, else C1 default window.  A Go
-    parse failure returns ``None`` so the caller can route the row to
-    a rejects table (the batch analog of the reference's error
+    A Go parse failure returns ``None`` so the caller can route the
+    row to a rejects table (the batch analog of the reference's error
     return).
+
+    With ``extractor`` (a key of ``extraction.EXTRACTORS``) each chunk
+    struct also carries ``extraction_json``, the extractor's llmResult
+    for that chunk: chunking and extraction then run in ONE Python
+    stage, so the content column crosses the JVM<->Python Arrow
+    boundary once.  The extractor factory is looked up here, on the
+    driver, and shipped with the UDF closure, so extractors registered
+    at run time reach the workers.  Iterator form: the extractor (an
+    LLM client, say) is built once per partition, not per batch.
     """
     # Fail fast on the driver, not inside an executor UDF loop.
     if max_tokens <= 0 or overlap_tokens >= max_tokens:
@@ -95,38 +126,41 @@ def make_chunker_udf(
             f"invalid chunker window: max_tokens={max_tokens}, "
             f"overlap_tokens={overlap_tokens} (need 0 < overlap < max)"
         )
+    fields = list(CHUNK_ELEMENT_SCHEMA.fields)
+    factory = None
+    if extractor is not None:
+        from kgforge.extraction import EXTRACTORS
 
-    @pandas_udf(CHUNK_ARRAY_TYPE)
-    def chunker(lang: pd.Series, content: pd.Series) -> pd.Series:
-        from kgforge.markdown import chunk_markdown
+        factory = EXTRACTORS[extractor]
+        fields.append(StructField("extraction_json", StringType(), True))
 
-        results = []
-        for lg, text in zip(lang, content):
-            text = "" if text is None else text.strip().replace("\x00", "")
-            try:
-                if lg == "go":
-                    chunks = chunk_go(text)
-                elif lg in ("markdown", "md"):
-                    chunks = chunk_markdown(text)
-                elif lg == "semantic":
-                    from kgforge.semantic import chunk_semantic
-
-                    chunks = chunk_semantic(text, max_tokens=max_tokens)
-                else:
-                    chunks = chunk_default(text, max_tokens, overlap_tokens)
-                results.append(
-                    [
-                        {
-                            "content": c,
-                            "token_size": t,
-                            "order_index": o,
-                        }
-                        for (c, t, o) in chunks
-                    ]
-                )
-            except GoParseError:
-                results.append(None)
-        return pd.Series(results, dtype=object)
+    @pandas_udf(ArrayType(StructType(fields)))
+    def chunker(
+        batches: Iterator[Tuple[pd.Series, pd.Series]],
+    ) -> Iterator[pd.Series]:
+        extract = factory() if factory is not None else None
+        for lang, content in batches:
+            results = []
+            for lg, text in zip(lang, content):
+                text = "" if text is None else text.strip().replace("\x00", "")
+                try:
+                    chunks = chunk_content(
+                        lg, text, max_tokens, overlap_tokens
+                    )
+                except GoParseError:
+                    results.append(None)
+                    continue
+                rows = [
+                    {"content": c, "token_size": t, "order_index": o}
+                    for (c, t, o) in chunks
+                ]
+                if extract is not None:
+                    for r in rows:
+                        r["extraction_json"] = json.dumps(
+                            extract(r["content"]), ensure_ascii=False
+                        )
+                results.append(rows)
+            yield pd.Series(results, dtype=object)
 
     return chunker
 
@@ -143,18 +177,21 @@ def build_chunks(
     repos: DataFrame,
     max_tokens: int = DEFAULT_MAX_TOKENS,
     overlap_tokens: int = DEFAULT_OVERLAP_TOKENS,
+    extractor: Optional[str] = None,
 ) -> Tuple[DataFrame, DataFrame]:
     """repos -> (chunks, rejects).
 
     chunks: one row per chunk with chunk_id = doc_id||'-chunk-'||order
-    (rag.go:264-266) and the per-row sha256(content) lineage invariant.
+    (rag.go:264-266) and the per-row sha256(content) lineage invariant;
+    with ``extractor`` also the chunk's ``extraction_json`` (see
+    :func:`make_chunker_udf`).
     rejects: rows whose chunker errored (invalid Go).
 
     Narrow stage: UDF + posexplode, no shuffle; partition pruning on
     (repo, lang) still applies upstream because the UDF is applied
     after the scan filters.
     """
-    chunker = make_chunker_udf(max_tokens, overlap_tokens)
+    chunker = make_chunker_udf(max_tokens, overlap_tokens, extractor)
     base = (
         repos.withColumn("doc_id", doc_id_col())
         .withColumn("content_clean", clean_content(F.col("content")))
@@ -166,9 +203,14 @@ def build_chunks(
     rejects = base.filter(F.col("chunk_arr").isNull()).select(
         "repo", "path", "commit", "lang", "doc_id", "content_sha"
     )
-    # no pre-explode isNotNull filter — redundant (posexplode_outer +
-    # the chunk-isNotNull filter below) and it duplicates the chunker
-    # UDF below the upstream exchange (see pipeline.extract_exploded)
+    # NO pre-explode chunk_arr-isNotNull filter: posexplode_outer
+    # turns a NULL (or empty) array into one null chunk row and the
+    # chunk-isNotNull filter below drops it, so the pre-filter was
+    # redundant — and harmful: a filter on a UDF-computed column gets
+    # pushed below the spread exchange and the optimizer then
+    # evaluates the chunker UDF TWICE, the first time as a SERIAL
+    # pass over the unspread single-split scan.
+    extra = [F.col("chunk.extraction_json")] if extractor else []
     chunks = (
         base.select(
             "repo",
@@ -192,6 +234,7 @@ def build_chunks(
             F.col("chunk.content").alias("content"),
             F.col("chunk.token_size").alias("token_size"),
             "content_sha",
+            *extra,
         )
     )
     return chunks, rejects

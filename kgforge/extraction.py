@@ -8,7 +8,10 @@ retry/backoff.  Spark shape: ONE Arrow-batched pandas UDF
 (``Iterator[pd.Series] -> Iterator[pd.Series]``) over the chunk
 content column returning the llmResult JSON string, parsed JVM-side by
 ``from_json`` into the typed EXTRACTION_SCHEMA — no per-row Python
-dispatch, no driver-side loop.
+dispatch, no driver-side loop.  The ingest path runs the extractor
+inside the chunker UDF instead (``chunking.make_chunker_udf``), so
+each document crosses into Python once; the standalone UDF here
+serves two-phase ingest, whose chunks already exist.
 
 Extractors are pluggable (the reference's ``LLM`` interface,
 rag.go:15-20):
@@ -29,7 +32,7 @@ from __future__ import annotations
 
 import json
 import re
-from typing import Callable, Iterator, List, Tuple
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import Column
@@ -212,7 +215,8 @@ def heuristic_extraction_col(content: Column) -> Column:
     extraction struct with codegen'd expressions and ships nothing:
     the content column crosses the Python boundary once, for chunking
     only.  Pluggability is untouched — fixture/LLM extractors keep
-    the fused-UDF JSON wire (see pipeline.extract_exploded).
+    the JSON wire of the fused chunker UDF (see
+    chunking.make_chunker_udf and pipeline.extract_exploded).
 
     Semantics pinned equal to heuristic_extract():
     - words: distinct lower-case [a-z]+ runs of length >=
@@ -298,100 +302,6 @@ def make_extraction_udf(extractor_name: str = "heuristic"):
             )
 
     return extract
-
-
-def make_chunk_extract_udf(
-    extractor_name: str = "heuristic",
-    max_tokens: int = 1024,
-    overlap_tokens: int = 128,
-):
-    """FUSED chunk+extract UDF: (lang, content) -> array of chunk
-    structs each carrying its extraction JSON.
-
-    The chunker and extractor are both pure Python; running them in
-    one pandas UDF means the (large) content column crosses the
-    JVM<->Python Arrow boundary ONCE instead of twice and the plan has
-    one Python stage instead of two chained ones — the dominant cost
-    of the ingest hot path at high core counts.  Semantics are
-    identical to chunker-then-extractor (same pure functions).
-    Returns None for rows the chunker rejects (invalid Go).
-    """
-    from kgforge.chunking import chunk_default
-    from kgforge.gochunk import GoParseError, chunk_go
-
-    factory = EXTRACTORS[extractor_name]
-    if max_tokens <= 0 or overlap_tokens >= max_tokens:
-        raise ValueError(
-            f"invalid chunker window: max_tokens={max_tokens}, "
-            f"overlap_tokens={overlap_tokens}"
-        )
-
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
-    schema = ArrayType(
-        StructType(
-            [
-                StructField("content", StringType(), False),
-                StructField("token_size", IntegerType(), False),
-                StructField("order_index", IntegerType(), False),
-                StructField("extraction_json", StringType(), True),
-            ]
-        )
-    )
-
-    @pandas_udf(schema)
-    def chunk_extract(
-        batches: Iterator[Tuple[pd.Series, pd.Series]],
-    ) -> Iterator[pd.Series]:
-        from kgforge.markdown import chunk_markdown
-
-        extractor = factory()
-        for lang, content in batches:
-            results = []
-            for lg, text in zip(lang, content):
-                text = (
-                    "" if text is None else text.strip().replace("\x00", "")
-                )
-                try:
-                    if lg == "go":
-                        chunks = chunk_go(text)
-                    elif lg in ("markdown", "md"):
-                        chunks = chunk_markdown(text)
-                    elif lg == "semantic":
-                        # C3 (handler/semantic.go:63-214) with the
-                        # deterministic paragraph span-proposer
-                        from kgforge.semantic import chunk_semantic
-
-                        chunks = chunk_semantic(
-                            text, max_tokens=max_tokens
-                        )
-                    else:
-                        chunks = chunk_default(
-                            text, max_tokens, overlap_tokens
-                        )
-                    results.append(
-                        [
-                            {
-                                "content": c,
-                                "token_size": t,
-                                "order_index": o,
-                                "extraction_json": json.dumps(
-                                    extractor(c), ensure_ascii=False
-                                ),
-                            }
-                            for (c, t, o) in chunks
-                        ]
-                    )
-                except GoParseError:
-                    results.append(None)
-            yield pd.Series(results, dtype=object)
-
-    return chunk_extract
 
 
 def extraction_col(

@@ -9,12 +9,17 @@ Spark plan (one narrow stage + two keyed shuffles + MERGE writes):
 
   repos (partitioned repo/lang)
     -> sha-gate anti-join vs checkpoint           [shuffle on doc_id]
-    -> chunker pandas UDF + posexplode            [narrow]
-    -> extraction pandas UDF -> from_json         [narrow]
+    -> chunker pandas UDF + posexplode            [narrow, one Python stage]
+         heuristic extractor: UDF only chunks;
+           extraction = JVM column expressions over chunk content
+         fixture / LLM extractors: same UDF also extracts per chunk;
+           extraction = from_json(extraction_json)
     -> explode mentions + canonicalize            [narrow]
-    -> entity reduce  groupBy(entity_id)          [shuffle, 2-level]
-    -> edge reduce    groupBy(src, dst)           [shuffle, 2-level]
-    -> placeholder anti-join, summaries           [small]
+    -> merge_into_graph: left-semi restrict the stored graph to the
+       touched keys, then
+       entity reduce  groupBy(entity_id)          [shuffle, 2-level]
+       edge reduce    groupBy(src, dst)           [shuffle, 2-level]
+       placeholder anti-join, summaries           [small]
     -> MERGE nodes / edges / embeddings / checkpoint
 
 Scale notes (100 TB / 10^12 files): the expensive work (chunk +
@@ -31,15 +36,16 @@ import datetime as dt
 from dataclasses import dataclass, field
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from kgforge import checkpoint as ckpt
 from kgforge import merge as mrg
 from kgforge.canonicalize import HEURISTIC_ENTITY_TYPES, explode_mentions
-from kgforge.chunking import clean_content, doc_id_col
+from kgforge.chunking import build_chunks, doc_id_col
 from kgforge.embedding import MODEL_NAME, embed_udf
-from kgforge.schemas import SEP
+from kgforge.extraction import heuristic_extraction_col
+from kgforge.schemas import EXTRACTION_SCHEMA, SEP
 from kgforge.store import ParquetTableStore
 
 
@@ -59,11 +65,6 @@ class PipelineConfig:
     merge_max_list_values: Optional[int] = None
     merge_max_sources: Optional[int] = None
     with_embeddings: bool = True
-    # observe()-based metrics piggyback counts on write actions (one
-    # fewer job each) but the observation listener never fires for
-    # actions run inside a streaming foreachBatch — the streaming
-    # path disables them and falls back to count().
-    use_observations: bool = True
     now: dt.datetime = field(
         default_factory=lambda: dt.datetime(
             2024, 1, 1, tzinfo=dt.timezone.utc
@@ -104,90 +105,19 @@ def documents_as_repos(docs: DataFrame) -> DataFrame:
 def extract_exploded(
     repos: DataFrame, config: PipelineConfig
 ) -> tuple[DataFrame, DataFrame]:
-    """repos -> (exploded chunk+extraction rows, rejects).
+    """repos -> (exploded chunk rows, rejects), via the one chunker UDF
+    (chunking.build_chunks).
 
-    Two wire formats, picked by the configured extractor:
-
-    - **heuristic** (the default): the UDF only CHUNKS — extraction
-      is a pure JVM column expression over the chunk content
-      (extraction.heuristic_extraction_col), so the content crosses
-      the JVM<->Python boundary once and the ~45x-the-corpus
-      extraction payload (67 MB of JSON at sf0.1) never exists: no
-      json.dumps in the worker, no Arrow transfer of it, no
-      from_json.  The ``extraction_json`` column carries NULL so the
-      frame shape is identical for both wires.
-    - **fixture / LLM extractors** (opaque Python): ONE fused pandas
-      UDF chunks AND extracts per document, returning the llmResult
-      JSON parsed later by from_json — the generic wire, unchanged.
-
-    Persist the parsed frame (see parse_extraction): chunks / entity
-    mentions / relationship mentions all derive from it with JVM-only
-    operators."""
-    sql_extraction = config.extractor == "heuristic"
-    if sql_extraction:
-        from kgforge.chunking import make_chunker_udf
-
-        udf = make_chunker_udf(
-            config.chunk_max_tokens, config.chunk_overlap_tokens
-        )
-        json_col = F.lit(None).cast("string")
-    else:
-        from kgforge.extraction import make_chunk_extract_udf
-
-        udf = make_chunk_extract_udf(
-            config.extractor,
-            config.chunk_max_tokens,
-            config.chunk_overlap_tokens,
-        )
-        json_col = F.col("chunk.extraction_json")
-    base = (
-        repos.withColumn("doc_id", doc_id_col())
-        .withColumn("content_clean", clean_content(F.col("content")))
-        .withColumn("content_sha", F.sha2(F.col("content"), 256))
-        .withColumn(
-            "chunk_arr", udf(F.col("lang"), F.col("content_clean"))
-        )
+    The heuristic extractor (the default) is SQL-expressible, so the
+    UDF only chunks and :func:`parse_extraction` builds the extraction
+    with JVM expressions over the chunk content: the ~45x-the-corpus
+    extraction payload (67 MB of JSON at sf0.1) never exists.  Opaque
+    Python extractors (fixture, LLM) run inside the chunker UDF and
+    add an ``extraction_json`` column, the llmResult wire."""
+    opaque = None if config.extractor == "heuristic" else config.extractor
+    return build_chunks(
+        repos, config.chunk_max_tokens, config.chunk_overlap_tokens, opaque
     )
-    rejects = base.filter(F.col("chunk_arr").isNull()).select(
-        "repo", "path", "commit", "lang", "doc_id", "content_sha"
-    )
-    # NO pre-explode chunk_arr-isNotNull filter: posexplode_outer
-    # turns a NULL (or empty) array into one null chunk row and the
-    # chunk-isNotNull filter below drops it, so the pre-filter was
-    # redundant — and harmful: a filter on a UDF-computed column gets
-    # pushed below the spread exchange and the optimizer then
-    # evaluates the chunker UDF TWICE, the first time as a SERIAL
-    # pass over the unspread single-split scan (two ArrowEvalPython
-    # nodes in the r6 before-plan, one of them 1-task).
-    exploded = (
-        base.select(
-            "repo",
-            "lang",
-            "doc_id",
-            "content_sha",
-            F.posexplode_outer("chunk_arr").alias("_pos", "chunk"),
-        )
-        .filter(F.col("chunk").isNotNull())
-        .select(
-            F.concat_ws(
-                "",
-                F.col("doc_id"),
-                F.lit("-chunk-"),
-                F.col("chunk.order_index").cast("string"),
-            ).alias("chunk_id"),
-            "doc_id",
-            "repo",
-            "lang",
-            F.col("chunk.order_index").alias("order_index"),
-            F.col("chunk.content").alias("content"),
-            F.col("chunk.token_size").alias("token_size"),
-            "content_sha",
-            json_col.alias("extraction_json"),
-        )
-    )
-    if sql_extraction:
-        exploded = exploded.withColumn("_sql_extraction", F.lit(True))
-    return exploded, rejects
 
 
 def parse_extraction(exploded: DataFrame) -> DataFrame:
@@ -195,18 +125,13 @@ def parse_extraction(exploded: DataFrame) -> DataFrame:
     (not the raw one): every consumer — entity mentions, relationship
     mentions, per-doc metric counts — then explodes a cached struct.
 
-    SQL-expressible extractors (the ``_sql_extraction`` marker from
-    extract_exploded) build the struct with JVM expressions over the
-    chunk content; opaque extractors parse their JSON wire with
-    from_json, as before."""
-    from kgforge.schemas import EXTRACTION_SCHEMA
-
-    if "_sql_extraction" in exploded.columns:
-        from kgforge.extraction import heuristic_extraction_col
-
+    An ``extraction_json`` column (opaque extractors) is parsed with
+    from_json; without one the heuristic struct is built with JVM
+    expressions over the chunk content."""
+    if "extraction_json" not in exploded.columns:
         return exploded.withColumn(
             "extraction", heuristic_extraction_col(F.col("content"))
-        ).drop("extraction_json", "_sql_extraction")
+        )
     return exploded.withColumn(
         "extraction",
         F.from_json(F.col("extraction_json"), EXTRACTION_SCHEMA),
@@ -215,7 +140,7 @@ def parse_extraction(exploded: DataFrame) -> DataFrame:
 
 def chunks_of(extracted: DataFrame) -> DataFrame:
     """CHUNKS_SCHEMA projection of the fused frame."""
-    return extracted.drop("extraction", "extraction_json")
+    return extracted.drop("extraction")
 
 
 def mentions_of(
@@ -288,6 +213,49 @@ def build_graph(
     placeholders = mrg.placeholder_nodes(edges, known, now=config.now)
     nodes = nodes.unionByName(placeholders)
     return nodes, edges
+
+
+def merge_into_graph(
+    store: ParquetTableStore,
+    ent_mentions: DataFrame,
+    rel_mentions: DataFrame,
+    config: PipelineConfig,
+) -> tuple[DataFrame, DataFrame]:
+    """The merge tail of every ingest path: new mentions + the stored
+    graph -> persisted merged (nodes, edges), ready to stage.
+
+    Incremental merge: only graph rows whose key appears in the new
+    mentions enter the reduce (left-semi restriction).  Untouched rows
+    stay in place via the keyed upsert — at 10^12-file scale a delta
+    run re-aggregates only its own keys instead of the world.  All
+    stored node ids still feed the placeholder check (see
+    :func:`build_graph`)."""
+    existing_nodes = store.read("nodes")
+    existing_edges = store.read("edges")
+    known_node_ids = None
+    if existing_nodes is not None:
+        known_node_ids = existing_nodes.select("entity_id")
+        touched_ents = ent_mentions.select(
+            F.col("entity_name").alias("entity_id")
+        ).distinct()
+        existing_nodes = existing_nodes.join(
+            touched_ents, "entity_id", "left_semi"
+        )
+    if existing_edges is not None:
+        touched_pairs = rel_mentions.select("src", "dst").distinct()
+        existing_edges = existing_edges.join(
+            touched_pairs, ["src", "dst"], "left_semi"
+        )
+    nodes, edges = build_graph(
+        ent_mentions,
+        rel_mentions,
+        existing_nodes=existing_nodes,
+        existing_edges=existing_edges,
+        config=config,
+        known_node_ids=known_node_ids,
+        persist=True,
+    )
+    return nodes.persist(), edges.persist()
 
 
 def embedding_rows(nodes: DataFrame, edges: DataFrame) -> DataFrame:
@@ -408,53 +376,13 @@ def run_insert(
         chunks.select("doc_id").distinct(), "doc_id", "left_anti"
     ).withColumn("status", F.lit("go-parse-error"))
 
-    # Incremental merge: only graph rows whose key appears in the new
-    # mentions enter the reduce (left-semi restriction).  Untouched
-    # rows stay in place via the keyed upsert — at 10^12-file scale a
-    # delta run re-aggregates only its own keys instead of the world.
-    existing_nodes = store.read("nodes")
-    existing_edges = store.read("edges")
-    known_node_ids = None
-    if existing_nodes is not None:
-        known_node_ids = existing_nodes.select("entity_id")
-        touched_ents = ents.select(
-            F.col("entity_name").alias("entity_id")
-        ).distinct()
-        existing_nodes = existing_nodes.join(
-            touched_ents, "entity_id", "left_semi"
-        )
-    if existing_edges is not None:
-        touched_pairs = rels.select("src", "dst").distinct()
-        existing_edges = existing_edges.join(
-            touched_pairs, ["src", "dst"], "left_semi"
-        )
-
-    nodes, edges = build_graph(
-        ents,
-        rels,
-        existing_nodes=existing_nodes,
-        existing_edges=existing_edges,
-        config=config,
-        known_node_ids=known_node_ids,
-        persist=True,
-    )
+    nodes, edges = merge_into_graph(store, ents, rels, config)
     # Ride row-count metrics on the write actions (observe) instead of
     # separate count() jobs — the driver-side serial job count is the
     # Amdahl floor of small-scale runs.
-    from pyspark.sql import Observation
-
-    use_obs = config.use_observations
-    obs_nodes, obs_edges = Observation(), Observation()
-    nodes = nodes.persist()
-    edges = edges.persist()
-    nodes_w = (
-        nodes.observe(obs_nodes, F.count(F.lit(1)).alias("n"))
-        if use_obs else nodes
-    )
-    edges_w = (
-        edges.observe(obs_edges, F.count(F.lit(1)).alias("n"))
-        if use_obs else edges
-    )
+    obs_nodes, obs_edges, obs_ckpt = (Observation() for _ in range(3))
+    nodes_w = nodes.observe(obs_nodes, F.count(F.lit(1)).alias("n"))
+    edges_w = edges.observe(obs_edges, F.count(F.lit(1)).alias("n"))
 
     # checkpoint: lineage + per-doc metrics — ONE aggregation over the
     # cached fused frame (higher-order size/filter on the struct
@@ -463,10 +391,8 @@ def run_insert(
     ckpt_rows = ckpt.build_checkpoint_rows(
         docs, ckpt.fused_metric_counts(exploded), now=config.now
     )
-    obs_ckpt = Observation()
-    ckpt_w = (
-        ckpt_rows.observe(obs_ckpt, F.sum("n_chunks").alias("n_chunks"))
-        if use_obs else ckpt_rows
+    ckpt_w = ckpt_rows.observe(
+        obs_ckpt, F.sum("n_chunks").alias("n_chunks")
     )
 
     # Stage every table concurrently — chunks included: the threads
@@ -514,12 +440,9 @@ def run_insert(
         "store_buckets_touched": {
             s.name: s.buckets_touched for s in staged
         },
-        "n_chunks": (
-            int(obs_ckpt.get["n_chunks"] or 0)
-            if use_obs else chunks.count()
-        ),
-        "n_nodes": int(obs_nodes.get["n"]) if use_obs else nodes.count(),
-        "n_edges": int(obs_edges.get["n"]) if use_obs else edges.count(),
+        "n_chunks": int(obs_ckpt.get["n_chunks"] or 0),
+        "n_nodes": int(obs_nodes.get["n"]),
+        "n_edges": int(obs_edges.get["n"]),
     }
     for df in (todo, exploded, nodes, edges):
         df.unpersist()

@@ -76,7 +76,6 @@ CHUNK_ELEMENT_SCHEMA = StructType(
         StructField("order_index", IntegerType(), False),
     ]
 )
-CHUNK_ARRAY_TYPE = ArrayType(CHUNK_ELEMENT_SCHEMA)
 
 # Raw extraction output per chunk: the llmResult JSON shape
 # (insert.go:319-322; field tags rag.go:181-200).

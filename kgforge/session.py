@@ -19,6 +19,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Half of physical RAM, capped at 48g.
+
+    In local mode the driver JVM hosts all executor threads, so the
+    heap must cover per-task execution memory x cores: an 8g heap
+    makes 32 concurrent aggregate tasks spill and inverts scaling on
+    a 128 GiB box.  A fixed 48g, though, lets the heap outgrow a small
+    machine until the kernel kills the JVM (15.4 GB RSS on a 15 GiB
+    host).  ``KGFORGE_DRIVER_MEM`` overrides for a deployment."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    half_gib = phys // 2**31
+    return f"{max(1, min(48, half_gib))}g"
+
+
 def build_session(
     app_name: str = "kgforge",
     master: str | None = None,
@@ -67,13 +81,9 @@ def build_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.autoBroadcastJoinThreshold", "33554432")
-        # local mode: the driver JVM hosts all executor threads, so the
-        # heap must cover per-task execution memory x cores — an 8g
-        # heap makes 32 concurrent aggregate tasks spill and inverts
-        # scaling. Size generously for the 128 GiB harness box.
         .config(
             "spark.driver.memory",
-            os.environ.get("KGFORGE_DRIVER_MEM", "48g"),
+            os.environ.get("KGFORGE_DRIVER_MEM") or default_driver_memory(),
         )
         .config("spark.memory.fraction", "0.7")
         # Spark renders the physical-plan STRING for the SQL listener

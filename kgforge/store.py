@@ -8,7 +8,7 @@ tables in one catalog namespace: ``chunks``, ``nodes``, ``edges``,
 Production target is Iceberg (``MERGE INTO`` upserts, hidden
 partitioning, snapshot commits).  This sandbox ships no Iceberg
 runtime jar, so the backend reproduces the three properties that
-matter at 10^12-row scale on plain parquet:
+matter at 10^12-row scale with parquet files alone:
 
 1. **O(delta) upserts, not O(table).**  Every table is laid out in
    ``N_BUCKETS`` hash-bucket directories (``K = pmod(xxhash64(keys),
@@ -33,7 +33,8 @@ matter at 10^12-row scale on plain parquet:
    with null back-fill; untouched old-generation files are read
    through the evolved schema (missing columns -> null) without a
    footer-merge pass.  A type CHANGE on an existing column raises
-   loudly instead of silently corrupting.
+   loudly instead of silently corrupting; nullability alone is not a
+   change.
 
 Single-writer invariant: concurrent upserts to the same store are not
 coordinated (the reference's storage layer has the same contract —
@@ -52,7 +53,13 @@ from typing import Dict, List, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 BUCKET_COL = "_bucket"
 DEFAULT_N_BUCKETS = 32
@@ -78,6 +85,20 @@ class StagedWrite:
     buckets_touched: int = 0
     n_buckets: int = 0
     base_entry: Optional[dict] = None
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every nested array element, map value and struct
+    field made nullable: the type with nullability stripped."""
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType)) for f in dt.fields]
+        )
+    return dt
 
 
 class CommitConflictError(RuntimeError):
@@ -166,10 +187,6 @@ class ParquetTableStore:
     def exists(self, name: str) -> bool:
         return name in self._manifest()["tables"]
 
-    def _is_bucketed(self, name: str) -> bool:
-        t = self._manifest()["tables"].get(name)
-        return bool(t) and t["layout"] == "bucketed"
-
     def _schema_of(self, t: dict) -> Optional[StructType]:
         if t.get("schema"):
             return StructType.fromJson(json.loads(t["schema"]))
@@ -177,13 +194,7 @@ class ParquetTableStore:
 
     def _read_entry(self, t: dict, table: str = "?") -> DataFrame:
         schema = self._schema_of(t)
-        if t["layout"] == "bucketed":
-            paths = [
-                os.path.join(self.root, d)
-                for d in t["buckets"].values()
-            ]
-        else:
-            paths = [os.path.join(self.root, d) for d in t["dirs"]]
+        paths = [os.path.join(self.root, d) for d in t["buckets"].values()]
         # A dir referenced by a manifest that is missing on disk is
         # CORRUPTION (half-applied GC, manual deletion, vacuum
         # misuse), never a normal state: raise loudly instead of
@@ -198,14 +209,6 @@ class ParquetTableStore:
             )
         if not paths:
             return self.spark.createDataFrame([], schema)
-        if t.get("partitioned"):
-            # partition-column discovery needs inference; plain layout
-            # with partition dirs is single-generation (overwrite only)
-            frames = [self.spark.read.parquet(p) for p in paths]
-            df = frames[0]
-            for f in frames[1:]:
-                df = df.unionByName(f, allowMissingColumns=True)
-            return df
         return self.spark.read.schema(schema).parquet(*paths)
 
     def read(self, name: str) -> Optional[DataFrame]:
@@ -224,119 +227,34 @@ class ParquetTableStore:
     # ------------------------------------------------------------------
 
     def overwrite(
-        self,
-        name: str,
-        df: DataFrame,
-        partition_by: Sequence[str] | None = None,
-        keys: Sequence[str] | None = None,
+        self, name: str, df: DataFrame, keys: Sequence[str]
     ) -> None:
-        """Atomic full replace.  With ``keys`` the table is written in
-        the hash-bucketed layout so later upserts can prune."""
-        if keys:
-            staged = self._stage_full(name, df, list(keys))
-        else:
-            gen = uuid.uuid4().hex[:8]
-            tdir = self._path(name)
-            os.makedirs(tdir, exist_ok=True)
-            tmp = tdir + ".tmp-" + gen
-            writer = df.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(tmp)
-            dname = os.path.join(name, "data-" + gen)
-            os.rename(tmp, os.path.join(self.root, dname))
-            old = self._manifest()["tables"].get(name)
-            staged = StagedWrite(
-                name=name,
-                entry={
-                    "layout": "plain",
-                    "dirs": [dname],
-                    "schema": df.schema.json(),
-                    "partitioned": bool(partition_by),
-                },
-                replaced_dirs=self._live_dirs(old),
-                staged_dirs=[dname],
-                base_entry=old,
-            )
-        self.commit([staged])
-
-    def append(
-        self,
-        name: str,
-        df: DataFrame,
-        partition_by: Sequence[str] | None = None,
-    ) -> None:
-        """Append a new data directory to a plain-layout table.
-
-        Schema evolution matches upsert(): adding columns is fine
-        (union-by-name, null back-fill both directions), a type change
-        on an existing column raises loudly, and the manifest stores
-        the UNION of old and new schemas — a batch that drops a column
-        can no longer hide that column from earlier generations
-        (ADVICE r3)."""
-        old = self._manifest()["tables"].get(name)
-        if old and old["layout"] == "bucketed":
-            raise ValueError(
-                f"table '{name}' is hash-bucketed; use upsert() "
-                "(keyed MERGE) instead of raw append"
-            )
-        old_schema = self._schema_of(old) if old else None
-        self._check_evolution(old_schema, df.schema, name)
-        merged_schema = df.schema
-        if old_schema is not None:
-            have = {f.name for f in df.schema.fields}
-            merged_schema = StructType(
-                list(df.schema.fields)
-                + [f for f in old_schema.fields if f.name not in have]
-            )
-        gen = uuid.uuid4().hex[:8]
-        tdir = self._path(name)
-        os.makedirs(tdir, exist_ok=True)
-        tmp = tdir + ".tmp-" + gen
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
-        dname = os.path.join(name, "data-" + gen)
-        os.rename(tmp, os.path.join(self.root, dname))
-        dirs = (old["dirs"] if old else []) + [dname]
-        self.commit([
-            StagedWrite(
-                name=name,
-                entry={
-                    "layout": "plain",
-                    "dirs": dirs,
-                    "schema": merged_schema.json(),
-                    "partitioned": bool(partition_by)
-                    or bool(old and old.get("partitioned")),
-                },
-                staged_dirs=[dname],
-                base_entry=old,
-            )
-        ])
+        """Atomic full replace, in the hash-bucketed layout so later
+        upserts can prune."""
+        self.commit([self._stage_full(name, df, list(keys))])
 
     @staticmethod
     def _live_dirs(t: Optional[dict]) -> List[str]:
-        if not t:
-            return []
-        if t["layout"] == "bucketed":
-            return list(t["buckets"].values())
-        return list(t["dirs"])
+        return list(t["buckets"].values()) if t else []
 
     def _check_evolution(
         self, old: Optional[StructType], new: StructType, name: str
     ) -> None:
         """Adding columns is fine (null back-fill); changing an
-        existing column's type is a loud error, never silent."""
+        existing column's type is a loud error, never silent.
+        Nullability is not part of the type: a merge that unions old
+        and new rows loosens it, so the next write would otherwise
+        see e.g. ``array<string NOT NULL>`` -> ``array<string>``."""
         if old is None:
             return
-        old_types = {f.name: f.dataType for f in old.fields}
+        old_types = {f.name: _nullable(f.dataType) for f in old.fields}
         for f in new.fields:
-            if f.name in old_types and old_types[f.name] != f.dataType:
+            new_type = _nullable(f.dataType)
+            if old_types.get(f.name, new_type) != new_type:
                 raise ValueError(
                     f"schema evolution conflict on table '{name}' "
                     f"column '{f.name}': {old_types[f.name]} -> "
-                    f"{f.dataType}"
+                    f"{new_type}"
                 )
 
     def _adopt_buckets(
@@ -362,8 +280,7 @@ class ParquetTableStore:
     def _stage_full(
         self, name: str, df: DataFrame, keys: List[str],
     ) -> StagedWrite:
-        """Stage a complete bucketed table (bulk load / full replace /
-        layout migration).
+        """Stage a complete bucketed table (bulk load / full replace).
 
         Always routes each bucket to one task (one shuffle on the
         bucket key): one file per bucket, co-located bucket joins
@@ -385,7 +302,6 @@ class ParquetTableStore:
         return StagedWrite(
             name=name,
             entry={
-                "layout": "bucketed",
                 "n_buckets": self.n_buckets,
                 "keys": keys,
                 "schema": df.schema.json(),
@@ -427,17 +343,6 @@ class ParquetTableStore:
             # the measurement that retired the round-2 shuffle-free
             # path).
             return self._stage_full(name, df, keys)
-
-        if t["layout"] != "bucketed":
-            # Legacy/plain table: one-time migration via full merge
-            # into the bucketed layout.
-            existing = self._read_entry(t, name)
-            self._check_evolution(existing.schema, df.schema, name)
-            keep = existing.join(
-                df.select(*keys).dropDuplicates(keys), keys, "left_anti"
-            )
-            merged = keep.unionByName(df, allowMissingColumns=True)
-            return self._stage_full(name, merged, keys)
 
         # Pruned merge: read ONLY the buckets the new rows hash into.
         old_schema = self._schema_of(t)
@@ -496,7 +401,6 @@ class ParquetTableStore:
         return StagedWrite(
             name=name,
             entry={
-                "layout": "bucketed",
                 "n_buckets": self.n_buckets,
                 "keys": keys,
                 "schema": schema_json,
@@ -562,11 +466,7 @@ class ParquetTableStore:
                 )
 
     def upsert(
-        self,
-        name: str,
-        df: DataFrame,
-        keys: Sequence[str],
-        partition_by: Sequence[str] | None = None,
+        self, name: str, df: DataFrame, keys: Sequence[str]
     ) -> StagedWrite:
         """MERGE INTO emulation: new rows win on key collision.
         Returns the staged-write record (bucket-touch stats)."""
@@ -585,7 +485,7 @@ class ParquetTableStore:
         wide bulk load is the typical candidate.  Returns
         {bucket: files_before} for the rewritten buckets."""
         t = self._manifest()["tables"].get(name)
-        if not t or t["layout"] != "bucketed":
+        if not t:
             return {}
         schema = self._schema_of(t)
         gen = uuid.uuid4().hex[:8]
@@ -732,7 +632,7 @@ class ParquetTableStore:
     def bucket_files(self, name: str) -> dict:
         t = self._manifest()["tables"].get(name)
         out: dict = {}
-        if not t or t["layout"] != "bucketed":
+        if not t:
             return out
         for b, dname in t["buckets"].items():
             full = os.path.join(self.root, dname)

@@ -59,12 +59,7 @@ def run_incremental_ingest(
     stream = reader.load(corpus_dir)
 
     def process_batch(batch_df, batch_id: int):
-        import dataclasses
-
-        # observe() listeners don't fire for actions inside
-        # foreachBatch -> use plain counts here
-        batch_config = dataclasses.replace(config, use_observations=False)
-        m = run_insert(batch_df.sparkSession, batch_df, store, batch_config)
+        m = run_insert(batch_df.sparkSession, batch_df, store, config)
         m["batch_id"] = batch_id
         metrics.append(m)
 

@@ -19,17 +19,15 @@ Batch-engine shape: a ``pending`` table of chunk ids.
 
 from __future__ import annotations
 
-import datetime as dt
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kgforge import merge as mrg
 from kgforge.canonicalize import explode_mentions
 from kgforge.chunking import build_chunks
 from kgforge.extraction import extraction_col
-from kgforge.pipeline import PipelineConfig, build_graph, embedding_rows
+from kgforge.pipeline import PipelineConfig, embedding_rows, merge_into_graph
 from kgforge.store import ParquetTableStore
 
 
@@ -116,32 +114,7 @@ def process_pending(
     ents = ents.persist()
     rels = rels.persist()
 
-    existing_nodes = store.read("nodes")
-    existing_edges = store.read("edges")
-    known_node_ids = None
-    if existing_nodes is not None:
-        known_node_ids = existing_nodes.select("entity_id")
-        existing_nodes = existing_nodes.join(
-            ents.select(F.col("entity_name").alias("entity_id")).distinct(),
-            "entity_id",
-            "left_semi",
-        )
-    if existing_edges is not None:
-        existing_edges = existing_edges.join(
-            rels.select("src", "dst").distinct(), ["src", "dst"],
-            "left_semi",
-        )
-    nodes, edges = build_graph(
-        ents,
-        rels,
-        existing_nodes=existing_nodes,
-        existing_edges=existing_edges,
-        config=config,
-        known_node_ids=known_node_ids,
-        persist=True,
-    )
-    nodes = nodes.persist()
-    edges = edges.persist()
+    nodes, edges = merge_into_graph(store, ents, rels, config)
     # Stage graph + embeddings + queue-status writes, then commit them
     # together: a crash can no longer leave edges merged but the chunk
     # still "pending" (which would double-add the additive edge weight

@@ -69,6 +69,11 @@ def test_incremental_ingest_available_now(spark, tmp_path):
     ckpt = str(tmp_path / "stream_ckpt")
     m1 = run_incremental_ingest(spark, corpus_dir, store, ckpt)
     assert sum(x["docs_processed"] for x in m1) == 1
+    # row counts ride observe() on the write actions, inside
+    # foreachBatch too
+    for key, table in (("n_chunks", "chunks"), ("n_nodes", "nodes"),
+                       ("n_edges", "edges")):
+        assert sum(x[key] for x in m1) == store.read(table).count() > 0
 
     # second activation with NO new files -> no work
     m2 = run_incremental_ingest(spark, corpus_dir, store, ckpt)

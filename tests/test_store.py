@@ -70,23 +70,6 @@ def test_upsert_insert_only_delta(spark, tmp_path):
     assert store.read("tbl").count() == 51
 
 
-def test_unbucketed_table_migrates_on_first_upsert(spark, tmp_path):
-    store = ParquetTableStore(spark, str(tmp_path / "t"), n_buckets=4)
-    plain = spark.createDataFrame(
-        [("a", 1), ("b", 2)], "key string, val long"
-    )
-    store.overwrite("legacy", plain)  # unbucketed layout
-    assert not store._is_bucketed("legacy")
-    store.upsert(
-        "legacy",
-        spark.createDataFrame([("b", 20), ("c", 3)], "key string, val long"),
-        ["key"],
-    )
-    assert store._is_bucketed("legacy")
-    got = {r.key: r.val for r in store.read("legacy").collect()}
-    assert got == {"a": 1, "b": 20, "c": 3}
-
-
 def test_staged_commit_is_all_or_nothing_visibility(spark, tmp_path):
     """Nothing staged is visible before commit; everything after."""
     store = ParquetTableStore(spark, str(tmp_path / "t"), n_buckets=4)
@@ -241,33 +224,32 @@ def test_schema_evolution_add_column_backfills_nulls(spark, tmp_path):
     assert rows["e2"] == ("A", "B")
     assert rows["e1"] == (None, None)
 
+    # a batch that drops columns cannot hide them from earlier rows:
+    # the live schema stays the union of old and new columns
+    store.upsert(
+        "emb",
+        spark.createDataFrame([("e3", 2.5)], "id string, w double"),
+        ["id"],
+    )
+    got = {r.id: (r.vec, r.src, r.w) for r in store.read("emb").collect()}
+    assert got == {
+        "e1": ("x", None, None),
+        "e2": ("y", "A", None),
+        "e3": (None, None, 2.5),
+    }
+
     with pytest.raises(ValueError, match="schema evolution conflict"):
         store.upsert(
             "emb",
-            spark.createDataFrame([("e3", 5)], "id string, vec long"),
+            spark.createDataFrame([("e4", 5)], "id string, vec long"),
             ["id"],
         )
-
-
-def test_exists_recognizes_partitioned_plain_tables(spark, tmp_path):
-    """round-2 ADVICE item 3: overwrite(partition_by=...) tables must
-    be visible to exists()/read() so a later upsert migrates instead
-    of silently discarding rows."""
-    store = ParquetTableStore(spark, str(tmp_path / "t"), n_buckets=4)
-    df = spark.createDataFrame(
-        [("a", "p1", 1), ("b", "p2", 2)], "key string, part string, val long"
-    )
-    store.overwrite("ptab", df, partition_by=["part"])
-    assert store.exists("ptab")
-    assert store.read("ptab").count() == 2
-    store.upsert(
-        "ptab",
-        spark.createDataFrame([("c", "p1", 3)],
-                              "key string, part string, val long"),
-        ["key"],
-    )
-    got = {r.key: r.val for r in store.read("ptab").collect()}
-    assert got == {"a": 1, "b": 2, "c": 3}
+    with pytest.raises(ValueError, match="evolution conflict"):
+        store.upsert(
+            "emb",
+            spark.createDataFrame([("e4", "s")], "id string, w string"),
+            ["id"],
+        )
 
 
 def test_snapshot_time_travel_with_history(spark, tmp_path):
@@ -410,8 +392,8 @@ def test_store_merge_matches_dict_model_property(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# ADVICE r3 hardening: corrupted-read detection, append evolution,
-# vacuum vs staged writes
+# ADVICE r3 hardening: corrupted-read detection, vacuum vs staged
+# writes
 # ---------------------------------------------------------------------------
 
 
@@ -433,22 +415,6 @@ def test_read_raises_on_missing_manifest_dir(spark, tmp_path):
     shutil.rmtree(os.path.join(store.root, victim))
     with pytest.raises(ValueError, match="missing data"):
         store.read("tbl").collect()
-
-
-def test_append_schema_evolution_union_by_name(spark, tmp_path):
-    """append() keeps the UNION of old and new schemas in the
-    manifest (a batch dropping a column cannot hide it from earlier
-    generations) and raises loudly on a type change."""
-    store = ParquetTableStore(spark, str(tmp_path / "t"))
-    a = spark.createDataFrame([("x", 1)], "key string, a long")
-    store.append("logs", a)
-    b = spark.createDataFrame([("y", 2.5)], "key string, b double")
-    store.append("logs", b)
-    got = {r.key: (r.a, r.b) for r in store.read("logs").collect()}
-    assert got == {"x": (1, None), "y": (None, 2.5)}
-    bad = spark.createDataFrame([("z", "s")], "key string, a string")
-    with pytest.raises(ValueError, match="evolution conflict"):
-        store.append("logs", bad)
 
 
 def test_vacuum_spares_staged_uncommitted_dirs(spark, tmp_path):
