@@ -1515,19 +1515,38 @@ def _graph(spark, sf_dir):
     return _memo(spark, sf_dir, "graph", build)
 
 
+# Explicit schemas for the query contexts, which kgforge.query
+# returns as lists of Rows.
+_ENTITY_CONTEXT = (
+    "name string, type string, description string, ref_count int, "
+    "created_at timestamp"
+)
+_RELATIONSHIP_CONTEXT = (
+    "source string, target string, keywords string, description string, "
+    "weight double, ref_count int, created_at timestamp"
+)
+_SOURCE_CONTEXT = "content string, source_id string, ref_count int"
+
+
+def _kg_context(spark, sf_dir, low, high, name, schema):
+    """One context of kgforge.query.query over the memoized graph, as
+    a DataFrame."""
+    from kgforge.query import query
+
+    chunks, nodes, edges, emb = _graph(spark, sf_dir)
+    rows = query(low, high, nodes, edges, chunks, emb, k=5)[name]
+    return spark.createDataFrame(rows, schema)
+
+
 def q_kg_local_entities(spark, sf_dir):
     """Q3 localContext entity leg (query.go:202-264): feature-hash
     embed the keywords, cosine top-5 ENTITY seeds, degree ref_count.
     The deterministic md5 feature-hash embedder makes the whole
     retrieval SQL-expressible."""
-    from kgforge.query import local_context
-
-    chunks, nodes, edges, emb = _graph(spark, sf_dir)
-    ent_ctx, _rel_ctx, _src_ctx = local_context(
-        "customer orders partition column stream", nodes, edges, chunks, emb,
-        k=5
-    )
-    return ent_ctx.select("name", "type", "description", "ref_count")
+    return _kg_context(
+        spark, sf_dir, "customer orders partition column stream", "",
+        "local_entities", _ENTITY_CONTEXT,
+    ).select("name", "type", "description", "ref_count")
 
 
 def q_kg_local_sources(spark, sf_dir):
@@ -1535,27 +1554,20 @@ def q_kg_local_sources(spark, sf_dir):
     (query.go:419-478): seed entities' source chunks start at count 0
     and gain +1 for each RELATED entity (1-hop endpoints minus seeds)
     whose source list contains them."""
-    from kgforge.query import local_context
-
-    chunks, nodes, edges, emb = _graph(spark, sf_dir)
-    _ent_ctx, _rel_ctx, src_ctx = local_context(
-        "customer orders partition column stream", nodes, edges, chunks,
-        emb, k=5,
-    )
-    return src_ctx.select("content", "source_id", "ref_count")
+    return _kg_context(
+        spark, sf_dir, "customer orders partition column stream", "",
+        "local_sources", _SOURCE_CONTEXT,
+    ).select("content", "source_id", "ref_count")
 
 
 def q_kg_global_relationships(spark, sf_dir):
     """Q4 globalContext relationship leg (query.go:266-347):
     relationship-embedding top-5 -> edge keys via the src/dst columns
     -> deg(src)+deg(dst) ref_count."""
-    from kgforge.query import global_context
-
-    chunks, nodes, edges, emb = _graph(spark, sf_dir)
-    _ent_ctx, rel_ctx, _src_ctx = global_context(
-        "entities customer and orders", nodes, edges, chunks, emb, k=5
-    )
-    return rel_ctx.select(
+    return _kg_context(
+        spark, sf_dir, "", "entities customer and orders",
+        "global_relationships", _RELATIONSHIP_CONTEXT,
+    ).select(
         "source", "target", "keywords", "description", "weight",
         "ref_count",
     )

@@ -13,25 +13,36 @@ two concurrent retrievals:
 then combineContexts renders CSV sections sorted by ref_count desc
 (query.go:563-592, 601-686).
 
-Spark shape: the graph is two tables; every reference storage call
-becomes a set-oriented join:
+Spark shape: like the reference's batch gets (neo.go:410-472), a
+query is a fixed sequence of literal-key fetches, each bounded by the
+seeds' 1-hop neighbourhood; the six contexts are then built on the
+driver from the rows they return:
 
-- batch get (Q10)        -> semi/inner join against a seed DataFrame
-- degree count (Q8)      -> explode(array(src,dst)) groupBy count
-- 1-hop neighbors (Q9)   -> seeds ⋈ edges (either endpoint)
-- ranked sources (Q6)    -> explode source_ids -> groupBy count
-- vector top-k (Q7)      -> kgforge.embedding.top_k
+1. seeds   -> one collect of both cosine top-k's over ``embeddings``
+              (kgforge.embedding.top_k): entity ids L for the
+              low-level keywords, relationship keys G = (src, dst) for
+              the high-level ones; a blank side is skipped;
+2. edges   -> one collect of the edges with src in L, dst in L or
+              (src, dst) in G: the 1-hop set and the global selection;
+3. degrees -> S = L + those edges' endpoints; the undirected degree of
+              each id in S (a self-loop counts twice), counted on the
+              JVM over the edges touching S, so at most |S| rows reach
+              the driver;
+4. nodes   -> one collect of the node rows for S;
+5. chunks  -> one collect of (chunk_id, content) for the source ids.
 
-Seed sets are tiny (top-k) -> Catalyst broadcasts them; the only big
-shuffle is the degree aggregation, which is a partial-aggregated
-count.
+``degrees`` and ``one_hop_edges`` are the set-oriented forms of steps
+3 and 2 over whole tables, kept for the standalone graph queries.
 """
 
 from __future__ import annotations
 
-from typing import List, Optional
+from collections import Counter
+from functools import reduce
+from operator import or_
+from typing import Iterable, List
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from kgforge.embedding import embed_text, top_k
@@ -39,6 +50,14 @@ from kgforge.schemas import SEP
 
 TOP_K = 5  # chromem.go:53 / tests' top-5
 SCORE_THRESHOLD = 0.2  # milvus.go:31
+
+# Context rows, field for field the reference's QueryResult records.
+EntityContext = Row("name", "type", "description", "ref_count", "created_at")
+RelationshipContext = Row(
+    "source", "target", "keywords", "description", "weight", "ref_count",
+    "created_at",
+)
+SourceContext = Row("content", "source_id", "ref_count")
 
 
 def degrees(edges: DataFrame) -> DataFrame:
@@ -49,20 +68,6 @@ def degrees(edges: DataFrame) -> DataFrame:
         .groupBy("entity_id")
         .agg(F.count("*").alias("degree"))
     )
-
-
-def vector_seed_ids(
-    embeddings: DataFrame,
-    kind: str,
-    keywords: str,
-    k: int = TOP_K,
-    threshold: Optional[float] = None,
-) -> DataFrame:
-    """Q7: embed the keyword string, cosine top-k over one collection."""
-    qv = embed_text(keywords)
-    return top_k(
-        embeddings.filter(F.col("kind") == kind), qv, k, threshold
-    ).select("id", "score")
 
 
 def one_hop_edges(seeds: DataFrame, edges: DataFrame) -> DataFrame:
@@ -76,172 +81,129 @@ def one_hop_edges(seeds: DataFrame, edges: DataFrame) -> DataFrame:
     )
 
 
-def _entity_contexts(nodes_sel: DataFrame, deg: DataFrame) -> DataFrame:
-    return (
-        nodes_sel.join(deg, "entity_id", "left")
-        .select(
-            F.col("entity_id").alias("name"),
-            F.col("entity_type").alias("type"),
-            F.array_join("descriptions", SEP).alias("description"),
-            F.coalesce("degree", F.lit(0)).cast("int").alias("ref_count"),
-            "created_at",
-        )
-    )
+def _seeds(embeddings: DataFrame, low: str, high: str, k: int):
+    """Q7, both sides in one collect: the top-k entity ids for the
+    low-level keywords and the top-k relationship (src, dst) keys for
+    the high-level ones; a blank side contributes nothing.  Edge keys
+    ride the embeddings table as real columns, never recovered by
+    splitting the id string (the reference's insert.go:583 bug)."""
+    sides = [
+        top_k(embeddings.filter(F.col("kind") == kind), embed_text(kw), k)
+        .select("kind", "id", "src", "dst")
+        for kind, kw in (("entity", low), ("relationship", high))
+        if kw.strip()
+    ]
+    if not sides:
+        return set(), set()
+    rows = reduce(DataFrame.unionByName, sides).collect()
+    local = {r.id for r in rows if r.kind == "entity"}
+    pairs = {
+        (r.src, r.dst) for r in rows
+        if r.kind == "relationship" and r.src is not None
+        and r.dst is not None
+    }
+    return local, pairs
 
 
-def _relationship_contexts(edges_sel: DataFrame, deg: DataFrame) -> DataFrame:
-    """refCount = degree(src) + degree(dst) (query.go:309-319)."""
-    d_src = deg.withColumnRenamed("entity_id", "src").withColumnRenamed(
-        "degree", "deg_src"
-    )
-    d_dst = deg.withColumnRenamed("entity_id", "dst").withColumnRenamed(
-        "degree", "deg_dst"
-    )
-    return (
-        edges_sel.join(d_src, "src", "left")
-        .join(d_dst, "dst", "left")
-        .select(
-            F.col("src").alias("source"),
-            F.col("dst").alias("target"),
-            F.array_join("keywords", SEP).alias("keywords"),
-            F.array_join("descriptions", SEP).alias("description"),
-            "weight",
-            (
-                F.coalesce("deg_src", F.lit(0))
-                + F.coalesce("deg_dst", F.lit(0))
-            ).cast("int").alias("ref_count"),
-            "created_at",
-        )
-    )
+def _join(values):
+    """``array_join(values, SEP)``: null elements skipped."""
+    return SEP.join(v for v in values if v is not None)
 
 
-def entities_ranked_sources(
-    seed_nodes: DataFrame,
-    related_nodes: DataFrame,
-    chunks: DataFrame,
-) -> DataFrame:
-    """Q6a (query.go:419-478): seed entities' source ids start at
-    count 0; +1 for each occurrence in RELATED entities' source ids
-    (only ids seeded by a primary entity count)."""
-    seeded = (
-        seed_nodes.select(F.explode("source_ids").alias("source_id"))
-        .filter(F.col("source_id") != "")
-        .distinct()
-    )
-    related_occ = (
-        related_nodes.select(F.explode("source_ids").alias("source_id"))
-        .filter(F.col("source_id") != "")
-        .groupBy("source_id")
-        .agg(F.count("*").alias("occ"))
-    )
-    counted = seeded.join(related_occ, "source_id", "left").select(
-        "source_id",
-        F.coalesce("occ", F.lit(0)).cast("int").alias("ref_count"),
-    )
-    return counted.join(
-        chunks.select(F.col("chunk_id").alias("source_id"), "content"),
-        "source_id",
-        "inner",
-    ).select("content", "source_id", "ref_count")
+def _source_ids(rows: Iterable[Row]) -> List[str]:
+    """Every non-empty source id of ``rows``, once per occurrence."""
+    return [s for r in rows for s in r.source_ids if s]
 
 
-def relationships_ranked_sources(
-    edges_sel: DataFrame, chunks: DataFrame
-) -> DataFrame:
-    """Q6b (query.go:519-561): count occurrences of each source id
-    across the selected edges."""
-    occ = (
-        edges_sel.select(F.explode("source_ids").alias("source_id"))
-        .filter(F.col("source_id") != "")
-        .groupBy("source_id")
-        .agg(F.count("*").cast("int").alias("ref_count"))
-    )
-    return occ.join(
-        chunks.select(F.col("chunk_id").alias("source_id"), "content"),
-        "source_id",
-        "inner",
-    ).select("content", "source_id", "ref_count")
-
-
-def local_context(
-    keywords: str,
+def query(
+    low_keywords: str,
+    high_keywords: str,
     nodes: DataFrame,
     edges: DataFrame,
     chunks: DataFrame,
     embeddings: DataFrame,
     k: int = TOP_K,
-):
-    """Q3 (query.go:202-264). Returns (entities, relationships,
-    sources) context DataFrames; empty keyword -> empty results."""
-    if not keywords.strip():
-        return _empty_contexts(nodes, edges, chunks)
-    seeds = vector_seed_ids(embeddings, "entity", keywords, k).select(
-        F.col("id").alias("entity_id")
-    )
-    deg = degrees(edges)
-    seed_nodes = nodes.join(F.broadcast(seeds), "entity_id", "left_semi")
-    ent_ctx = _entity_contexts(seed_nodes, deg)
+) -> dict:
+    """Full read path: the six contexts keyed as the reference's
+    QueryResult fields (query.go:36-43), each a list of Rows
+    (``EntityContext``, ``RelationshipContext``, ``SourceContext``)."""
+    local, pairs = _seeds(embeddings, low_keywords, high_keywords, k)
+    hop, sel = [], []
+    if local or pairs:
+        key = sorted(local)
+        incident = F.col("src").isin(key) | F.col("dst").isin(key)
+        wanted = reduce(or_, [
+            (F.col("src") == s) & (F.col("dst") == d) for s, d in pairs
+        ], incident)
+        for e in edges.filter(wanted).collect():
+            if e.src in local or e.dst in local:
+                hop.append(e)
+            if (e.src, e.dst) in pairs:
+                sel.append(e)
 
-    hop = one_hop_edges(seeds, edges)
-    rel_ctx = _relationship_contexts(hop, deg)
+    ids = local | {x for e in hop + sel for x in (e.src, e.dst)}
+    deg, node = {}, {}
+    if ids:
+        key = sorted(ids)
+        deg = dict(
+            edges.filter(F.col("src").isin(key) | F.col("dst").isin(key))
+            .select(F.explode(F.array("src", "dst")).alias("entity_id"))
+            .filter(F.col("entity_id").isin(key))
+            .groupBy("entity_id").count().collect()
+        )
+        node = {
+            n.entity_id: n
+            for n in nodes.filter(F.col("entity_id").isin(key)).collect()
+        }
 
-    # related entities = endpoints of 1-hop edges minus the seeds
-    related_ids = (
-        hop.select(F.explode(F.array("src", "dst")).alias("entity_id"))
-        .distinct()
-        .join(seeds, "entity_id", "left_anti")
-    )
-    related_nodes = nodes.join(
-        F.broadcast(related_ids), "entity_id", "left_semi"
-    )
-    src_ctx = entities_ranked_sources(seed_nodes, related_nodes, chunks)
-    return ent_ctx, rel_ctx, src_ctx
+    # local sources: the seeds' ids, +1 per occurrence in a RELATED
+    # node (1-hop endpoints minus the seeds) (query.go:419-478);
+    # global sources: occurrences across the selected edges
+    # (query.go:519-561)
+    related = {x for e in hop for x in (e.src, e.dst)} - local
+    seeded = set(_source_ids(node[i] for i in local if i in node))
+    occ = Counter(_source_ids(node[i] for i in related if i in node))
+    global_occ = Counter(_source_ids(sel))
+    content = {}
+    if seeded or global_occ:
+        content = dict(
+            chunks.filter(
+                F.col("chunk_id").isin(sorted(seeded | set(global_occ)))
+            ).select("chunk_id", "content").collect()
+        )
 
+    def entities(names):
+        return [
+            EntityContext(i, node[i].entity_type,
+                          _join(node[i].descriptions), deg.get(i, 0),
+                          node[i].created_at)
+            for i in sorted(names) if i in node
+        ]
 
-def global_context(
-    keywords: str,
-    nodes: DataFrame,
-    edges: DataFrame,
-    chunks: DataFrame,
-    embeddings: DataFrame,
-    k: int = TOP_K,
-):
-    """Q4 (query.go:266-347): edge-first retrieval."""
-    if not keywords.strip():
-        return _empty_contexts(nodes, edges, chunks)
-    # Edge keys ride the embeddings table as REAL (src, dst) columns —
-    # never recovered by splitting the id string, which would corrupt
-    # keys for entity names containing the delimiter (the class of bug
-    # the reference has at insert.go:583).
-    qv = embed_text(keywords)
-    seeds = top_k(
-        embeddings.filter(F.col("kind") == "relationship"), qv, k
-    )
-    edge_keys = seeds.select("src", "dst").where(
-        F.col("src").isNotNull() & F.col("dst").isNotNull()
-    )
-    sel_edges = edges.join(
-        F.broadcast(edge_keys), ["src", "dst"], "left_semi"
-    )
-    deg = degrees(edges)
-    rel_ctx = _relationship_contexts(sel_edges, deg)
+    def relationships(rows):
+        # refCount = degree(src) + degree(dst) (query.go:309-319)
+        return [
+            RelationshipContext(e.src, e.dst, _join(e.keywords),
+                                _join(e.descriptions), e.weight,
+                                deg.get(e.src, 0) + deg.get(e.dst, 0),
+                                e.created_at)
+            for e in rows
+        ]
 
-    endpoint_ids = sel_edges.select(
-        F.explode(F.array("src", "dst")).alias("entity_id")
-    ).distinct()
-    endpoint_nodes = nodes.join(
-        F.broadcast(endpoint_ids), "entity_id", "left_semi"
-    )
-    ent_ctx = _entity_contexts(endpoint_nodes, deg)
-    src_ctx = relationships_ranked_sources(sel_edges, chunks)
-    return ent_ctx, rel_ctx, src_ctx
+    def sources(counts):
+        return [
+            SourceContext(content[s], s, n)
+            for s, n in sorted(counts.items()) if s in content
+        ]
 
-
-def _empty_contexts(nodes, edges, chunks):
-    ent = _entity_contexts(nodes.limit(0), degrees(edges.limit(0)))
-    rel = _relationship_contexts(edges.limit(0), degrees(edges.limit(0)))
-    src = relationships_ranked_sources(edges.limit(0), chunks.limit(0))
-    return ent, rel, src
+    return {
+        "local_entities": entities(local),
+        "local_relationships": relationships(hop),
+        "local_sources": sources({s: occ[s] for s in seeded}),
+        "global_entities": entities({x for e in sel for x in (e.src, e.dst)}),
+        "global_relationships": relationships(sel),
+        "global_sources": sources(global_occ),
+    }
 
 
 # ---------------------------------------------------------------------------
@@ -282,102 +244,44 @@ def _q(value) -> str:
     return "".join(out)
 
 
-def _combine(headers: List[str], ctx1: List[tuple], ctx2: List[tuple]) -> str:
-    """combineContexts: merge keyed by rendered row (later wins), sort
-    ref_count desc, CSV with row-number ids."""
-    merged = {}
-    for row, ref in ctx1:
-        merged[row] = (row, ref)
-    for row, ref in ctx2:
-        merged[row] = (row, ref)
-    ordered = sorted(merged.values(), key=lambda t: -t[1])
-    out = ",".join(headers) + "\n"
-    for i, (row, _) in enumerate(ordered):
-        out += f"{_q(i)},{row}\n"
-    return out
-
-
-def _entity_rows(df: DataFrame) -> List[tuple]:
-    return [
-        (
-            ",".join(
-                [_q(r.name), _q(r.type), _q(r.description),
-                 _q(r.ref_count), _q(r.created_at)]
-            ),
-            r.ref_count,
-        )
-        for r in df.collect()
-    ]
-
-
-def _rel_rows(df: DataFrame) -> List[tuple]:
-    return [
-        (
-            ",".join(
-                [_q(r.source), _q(r.target), _q(r.keywords),
-                 _q(r.description), _q(f"{r.weight:.2f}"),
-                 _q(r.ref_count), _q(r.created_at)]
-            ),
-            r.ref_count,
-        )
-        for r in df.collect()
-    ]
-
-
-def _src_rows(df: DataFrame) -> List[tuple]:
-    return [
-        (
-            ",".join([_q(r.content), _q(r.source_id), _q(r.ref_count)]),
-            r.ref_count,
-        )
-        for r in df.collect()
-    ]
-
-
-def query(
-    low_keywords: str,
-    high_keywords: str,
-    nodes: DataFrame,
-    edges: DataFrame,
-    chunks: DataFrame,
-    embeddings: DataFrame,
-    k: int = TOP_K,
-) -> dict:
-    """Full read path: returns the six context DataFrames keyed as the
-    reference's QueryResult fields (query.go:36-43)."""
-    le, lr, ls = local_context(low_keywords, nodes, edges, chunks,
-                               embeddings, k)
-    ge, gr, gs = global_context(high_keywords, nodes, edges, chunks,
-                                embeddings, k)
-    return {
-        "local_entities": le,
-        "local_relationships": lr,
-        "local_sources": ls,
-        "global_entities": ge,
-        "global_relationships": gr,
-        "global_sources": gs,
-    }
+def _combine(headers: List[str], rows: List[tuple]) -> str:
+    """combineContexts: one line per distinct (rendered row, ref_count)
+    -- a local row identical to a global one is the same line --
+    ref_count desc, ties by rendered row so the order never depends on
+    fetch or hash order; CSV with row-number ids."""
+    ordered = sorted(set(rows), key=lambda t: (-t[1], t[0]))
+    return "".join(
+        [",".join(headers) + "\n"]
+        + [f"{_q(i)},{row}\n" for i, (row, _) in enumerate(ordered)]
+    )
 
 
 def render_query_result(result: dict) -> str:
     """QueryResult.String (query.go:601-686): three fenced CSV
-    sections, ref_count descending, local overriding global on exact
-    duplicate rows."""
-    entities = _combine(
-        ["id", "name", "type", "description", "ref_count", "created_at"],
-        _entity_rows(result["global_entities"]),
-        _entity_rows(result["local_entities"]),
+    sections, global and local rows merged, ref_count descending."""
+    def section(name, headers, cells):
+        rows = [
+            (",".join(_q(c) for c in cells(r)), r.ref_count)
+            for r in result[f"global_{name}"] + result[f"local_{name}"]
+        ]
+        return _combine(["id"] + headers, rows)
+
+    entities = section(
+        "entities",
+        ["name", "type", "description", "ref_count", "created_at"],
+        lambda r: (r.name, r.type, r.description, r.ref_count,
+                   r.created_at),
     )
-    relationships = _combine(
-        ["id", "source", "target", "keywords", "description", "weight",
+    relationships = section(
+        "relationships",
+        ["source", "target", "keywords", "description", "weight",
          "ref_count", "created_at"],
-        _rel_rows(result["global_relationships"]),
-        _rel_rows(result["local_relationships"]),
+        lambda r: (r.source, r.target, r.keywords, r.description,
+                   f"{r.weight:.2f}", r.ref_count, r.created_at),
     )
-    sources = _combine(
-        ["id", "content", "ref_count"],
-        _src_rows(result["global_sources"]),
-        _src_rows(result["local_sources"]),
+    sources = section(
+        "sources", ["content", "ref_count"],
+        lambda r: (r.content, r.source_id, r.ref_count),
     )
     fence = "```"
     return (

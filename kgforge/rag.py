@@ -73,6 +73,9 @@ class LightRAG:
         }
 
     def query(self, conversations: List[dict]) -> dict:
+        """The six query contexts (lists of Rows, see
+        :func:`kgforge.query.query`), all read from one store
+        snapshot."""
         query_text, histories = extract_query_and_histories(conversations)
         history_str = "\n".join(
             f"role: {c.get('role')}, content: {c.get('message')}"
@@ -82,13 +85,12 @@ class LightRAG:
         ll = ", ".join(kw["low_level_keywords"])
         hl = ", ".join(kw["high_level_keywords"])
 
-        nodes = self.store.read("nodes")
-        edges = self.store.read("edges")
-        chunks = self.store.read("chunks")
-        embeddings = self.store.read("embeddings")
-        if any(t is None for t in (nodes, edges, chunks, embeddings)):
+        tables = self.store.read_tables(
+            "nodes", "edges", "chunks", "embeddings"
+        )
+        if any(t is None for t in tables):
             raise RuntimeError("store is empty — run insert() first")
-        return q.query(ll, hl, nodes, edges, chunks, embeddings, self.top_k)
+        return q.query(ll, hl, *tables, self.top_k)
 
     def query_text(self, conversations: List[dict]) -> str:
         """Query + the reference's CSV render (QueryResult.String)."""

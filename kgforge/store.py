@@ -212,10 +212,17 @@ class ParquetTableStore:
         return self.spark.read.schema(schema).parquet(*paths)
 
     def read(self, name: str) -> Optional[DataFrame]:
-        t = self._manifest()["tables"].get(name)
-        if t is None:
-            return None
-        return self._read_entry(t, name)
+        return self.read_tables(name)[0]
+
+    def read_tables(self, *names: str) -> List[Optional[DataFrame]]:
+        """Read ``names`` through ONE manifest resolution, so they all
+        come from the same committed snapshot even if a commit lands
+        in between (``None`` for a table not in it)."""
+        tables = self._manifest()["tables"]
+        return [
+            self._read_entry(tables[n], n) if n in tables else None
+            for n in names
+        ]
 
     def _bucket_expr(self, keys: Sequence[str]):
         return F.pmod(
